@@ -272,6 +272,9 @@ object RestRegistry {
             // an unreadable/absent registry here skips, unmarked, so
             // the table's next commit retries.
             val registered = withLock(wh) {
+              // again under the lock: a peer rewrite landing since the
+              // check above would otherwise be stamped as our own below
+              validateKnownAgainst(wh)
               readEntries(wh) match {
                 case Some(cur) =>
                   if (!cur.contains(rel)) writeEntries(wh, cur + rel)
@@ -292,15 +295,17 @@ object RestRegistry {
   def unregister(warehouse: Path, tableRelPath: String): Unit =
     try {
       if (!Files.isRegularFile(registryFile(warehouse))) return
-      // purge-on-change BEFORE any stamping, mirroring maybeRegister
-      // (r19 ADVICE): stamping unconditionally would record an
-      // EXTERNAL rewrite's fingerprint as "our own write" and the next
-      // validateKnownAgainst would never purge `known`
-      validateKnownAgainst(warehouse)
       // a skipped rewrite (peer holds the lock) leaves a stale line:
       // the REST tables route re-validates per page, so it can hide a
       // row but never serve one
       withLock(warehouse) {
+        // purge-on-change BEFORE any stamping, mirroring
+        // maybeRegister: stamping unconditionally would record an
+        // EXTERNAL rewrite's fingerprint as "our own write" and the
+        // next validateKnownAgainst would never purge `known`. Under
+        // the lock, so no peer rewrite can land between this check
+        // and our stamp
+        validateKnownAgainst(warehouse)
         readEntries(warehouse).foreach { cur =>
           if (cur.contains(tableRelPath)) {
             writeEntries(warehouse, cur - tableRelPath)
@@ -320,11 +325,11 @@ object RestRegistry {
   def unregisterPrefix(warehouse: Path, nsRelPath: String): Unit =
     try {
       if (!Files.isRegularFile(registryFile(warehouse))) return
-      // see unregister: validate (purge-on-change) first, stamp only
-      // after an actual write
-      validateKnownAgainst(warehouse)
       val pfx = nsRelPath + "/"
       withLock(warehouse) {
+        // see unregister: validate (purge-on-change) under the lock
+        // first, stamp only after an actual write
+        validateKnownAgainst(warehouse)
         readEntries(warehouse).foreach { cur =>
           val keep = cur.filterNot(e => e == nsRelPath || e.startsWith(pfx))
           if (keep.size != cur.size) {

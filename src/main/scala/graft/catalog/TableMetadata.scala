@@ -1,6 +1,6 @@
 package graft.catalog
 
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -438,7 +438,8 @@ object TableMetadata {
     }
 
   /** Instrumentation: full map-materializing resolves actually built
-    * (cache misses only) — MetaScaleSpec bounds warm loads at zero. */
+    * (cache misses that could not extend an older entry) — MetaScaleSpec
+    * bounds warm loads and post-append loads at zero. */
   private[graft] val resolvesBuilt = new java.util.concurrent.atomic.AtomicLong
 
   /** [[resolve]] behind a fingerprint-validated LRU, for the two
@@ -448,16 +449,25 @@ object TableMetadata {
     * fileSeq maps — ~0.36 s at 200k files, ~2.8 s at 1M, PER LOAD —
     * which made warm scan planning on large tables map-building-bound.
     * Keyed by the version file's (path, size, mtime) exactly like the
-    * render cache: version files are immutable, expire swaps them for
-    * tombstones (fingerprint changes → entry drops), and a new commit
-    * is a new key (stale entries age out of the 8-way LRU). The cached
+    * render cache: version files are immutable, and expire swaps them
+    * for tombstones (fingerprint changes → entry drops). The cached
     * meta is immutable and SHARES its ManifestEntry instances with the
     * chunk cache, so the footprint is the map nodes — same budget
     * class as the render cache's 8 RenderedStates. Keyed per TABLE
     * (one live entry each, replaced on version advance): keying by
     * version file would pin up to 8 VERSIONS of one streaming table's
     * maps. Only exact (unfiltered or nothing-pruned) resolves cache:
-    * a chunk-pruned resolve is scan-specific and stays uncached. */
+    * a chunk-pruned resolve is scan-specific and stays uncached.
+    *
+    * A new commit misses the cache, but it rarely needs a full
+    * rebuild: appends (declared or not) and MoR delete-only commits
+    * keep every previous [[ManifestRef]] as a PREFIX of the new list
+    * ([[extendState]]). When the table's entry is an OLDER version
+    * whose list is a non-empty prefix of the new one, the miss
+    * [[extendResolved extends]] it by the tail chunks alone — O(delta)
+    * per load, not O(table). Chunk rewrites (COW DML, compaction,
+    * [[commitConsolidatedManifests]]), a same-version replacement
+    * (fingerprint change) and an empty cache take the full build. */
   private final case class ResolvedEntry(
       vfKey: String, size: Long,
       mtime: java.nio.file.attribute.FileTime, meta: TableMetadata)
@@ -483,15 +493,52 @@ object TableMetadata {
         hit match {
           case Some(e) if e.vfKey == vfKey && e.size == size && e.mtime == mtime =>
             e.meta
-          case _ =>
-            val r = resolve(mdDir, summary)
+          case prev =>
+            val r = prev.flatMap(e => extendResolved(mdDir, e.meta, summary))
+              .getOrElse(resolve(mdDir, summary))
             resolvedMetas.synchronized {
-              resolvedMetas.put(tableKey, ResolvedEntry(vfKey, size, mtime, r)); ()
+              // a slower loader of an OLDER version must not replace a
+              // newer entry (later loads would pay a longer extension
+              // or a full build); a newer entry whose version file is
+              // gone or replaced (drop + recreate at the same path) is
+              // dead and yields
+              val cur = resolvedMetas.get(tableKey)
+              if (cur == null || cur.meta.version <= r.version ||
+                  !fileFingerprint(Paths.get(cur.vfKey)).contains((cur.size, cur.mtime)))
+                resolvedMetas.put(tableKey, ResolvedEntry(vfKey, size, mtime, r))
             }
             r
         }
     }
   }
+
+  /** `base` (an older resolved version of the same table) extended to
+    * `summary` by the chunks past `base`'s manifest list, or None when
+    * that list is not a non-empty prefix of `summary`'s. Exactly what
+    * [[resolve]] builds: its maps fold entries in list order with the
+    * later entry winning, and `++` over the tail keeps that rule. Tail
+    * chunks go through [[Manifests.read]], so each passes the count
+    * gate. Every payload field comes from `summary`. */
+  private def extendResolved(
+      mdDir: Path, base: TableMetadata, summary: TableMetadata): Option[TableMetadata] = {
+    val n = base.manifests.size
+    if (n == 0 || base.version >= summary.version ||
+        summary.manifests.take(n) != base.manifests) None
+    else {
+      val tail = Manifests.resolveAll(mdDir, summary.manifests.drop(n))
+      Some(summary.copy(
+        files = base.files.toVector ++ tail.iterator.map(_.path),
+        fileStats = base.fileStats ++
+          tail.iterator.filter(_.stats.nonEmpty).map(e => e.path -> e.stats),
+        fileRows = base.fileRows ++ tail.iterator.flatMap(e => e.rows.map(e.path -> _)),
+        fileSeq = base.fileSeq ++ tail.iterator.map(e => e.path -> e.seq)))
+    }
+  }
+
+  /** Version of the table's resolved-meta cache entry, if any. */
+  private[graft] def cachedResolvedVersionForTesting(tableDir: Path): Option[Int] =
+    resolvedMetas.synchronized(
+      Option(resolvedMetas.get(renderKey(metadataDir(tableDir)))).map(_.meta.version))
 
   /** Columns that earn a per-chunk manifest-list summary
     * ([[ManifestRef.summary]]): the clustering contract's columns —
@@ -826,7 +873,7 @@ object TableMetadata {
     * appends) accrues one tiny ref per commit and planning cost grows
     * with ref count — Iceberg ships `rewrite_manifests` for exactly
     * this. `base` must be freshly loaded (resolved). */
-  private[catalog] def commitConsolidatedManifests(
+  private[graft] def commitConsolidatedManifests(
       tableDir: Path,
       base: TableMetadata): TableMetadata = {
     val md = metadataDir(tableDir)

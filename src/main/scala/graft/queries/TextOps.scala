@@ -203,8 +203,10 @@ object TextOps {
     // edges (r20, guide §5 job-count): head(cutoff+1) returns every
     // edge iff the set fits under the cutoff, and its bounded overflow
     // row proves it doesn't — the old count()-then-collect() pair was
-    // two sequential jobs over the same pinned frame
-    val firstEdges = cached.head(smallCutoff.toInt + 1)
+    // two sequential jobs over the same pinned frame. Clamped: a cutoff
+    // at or past Int.MaxValue would wrap `toInt + 1` to head(0) and
+    // take the driver path with no edges
+    val firstEdges = cached.head(math.min(smallCutoff, Int.MaxValue - 1L).toInt + 1)
     if (firstEdges.length <= smallCutoff) {
       val spark = pairs.sparkSession
       import spark.implicits._

@@ -14,7 +14,10 @@ import org.scalatest.matchers.should.Matchers
   *  - a cold one-partition `resolveForScan` parses ≤ 2 of the chunks
   *    and reads a fraction of the full-resolve bytes;
   *  - mirror maintenance after an append writes exactly ONE new chunk
-  *    manifest and reuses every other.
+  *    manifest and reuses every other;
+  *  - a load after an append or a delete-only commit builds ZERO full
+  *    resolves (it extends the cached predecessor) and equals a cold
+  *    resolve field for field.
   */
 class MetaScaleSpec extends AnyFunSuite with Matchers {
 
@@ -161,7 +164,7 @@ class MetaScaleSpec extends AnyFunSuite with Matchers {
   }
 
   test("resolved-meta cache: warm loads build zero resolves; a commit or file swap invalidates") {
-    import graft.catalog.{Manifests, Snapshot, TableMetadata, ColumnRange}
+    import graft.catalog.{DeleteFile, Manifests, Snapshot, TableMetadata, ColumnRange}
     import org.apache.spark.sql.types._
     val dir = Files.createTempDirectory("graft-meta-rc-")
     val td = dir.resolve("t")
@@ -172,7 +175,7 @@ class MetaScaleSpec extends AnyFunSuite with Matchers {
       version = 1, name = "t", schema = schema,
       partitionColumns = Seq("p"), properties = Map.empty,
       files = Nil, snapshots = Seq(Snapshot(1, 1L, "create", 0, 0))))
-    def append(part: String): Unit = {
+    def append(part: String, declared: Boolean = false): Unit = {
       val rels = (0 until 50).map(i => s"data/$part/part-$i.parquet")
       m = TableMetadata.commit(td, m.copy(
         version = m.version + 1,
@@ -181,7 +184,31 @@ class MetaScaleSpec extends AnyFunSuite with Matchers {
           r -> Map("p" -> ColumnRange(part, part, Some(0L)))),
         fileRows = m.fileRows ++ rels.map(_ -> 10L),
         snapshots = m.snapshots :+ Snapshot(
-          m.version + 1, m.version + 1L, "append", rels.size, 0)))
+          m.version + 1, m.version + 1L, "append", rels.size, 0)),
+        if (declared) Some(TableMetadata.AppendDelta(rels)) else None)
+    }
+    // one commit, then a load: (full resolves the load built, result)
+    def loadAfter(commit: => Unit): (Long, TableMetadata) = {
+      commit
+      TableMetadata.resolvesBuilt.set(0)
+      val got = TableMetadata.load(td)
+      (TableMetadata.resolvesBuilt.get(), got)
+    }
+    // field for field against a COLD full resolve of the same version
+    // (every cache dropped, every chunk re-parsed from disk), then
+    // re-warm so the next commit meets a cached predecessor again
+    def shouldEqualCold(got: TableMetadata): Unit = {
+      Manifests.clearCacheForTesting()
+      val cold = TableMetadata.loadFile(td, TableMetadata.versionFile(td, got.version))
+      got.files shouldBe cold.files
+      got.fileStats shouldBe cold.fileStats
+      got.fileRows shouldBe cold.fileRows
+      got.fileSeq shouldBe cold.fileSeq
+      got.manifests shouldBe cold.manifests
+      got.snapshots shouldBe cold.snapshots
+      got.deleteFiles shouldBe cold.deleteFiles
+      got shouldBe cold
+      TableMetadata.load(td); ()
     }
     try {
       append("a"); append("b")
@@ -194,21 +221,70 @@ class MetaScaleSpec extends AnyFunSuite with Matchers {
       val warm = TableMetadata.load(td)
       TableMetadata.resolvesBuilt.get() shouldBe 0L
       warm.files should have size 100
-      // a new commit is a new version file: exactly one fresh resolve
-      append("c")
-      TableMetadata.resolvesBuilt.set(0)
-      TableMetadata.load(td).files should have size 150
-      TableMetadata.resolvesBuilt.get() shouldBe 1L
+      // a new commit is a new version file, but an append keeps the
+      // cached predecessor's manifest list as a prefix: the load extends
+      // it by the new chunk — ZERO full resolves
+      val (appendBuilds, appended) = loadAfter(append("c"))
+      appended.files should have size 150
+      appendBuilds shouldBe 0L
       // ...and then warm again
       TableMetadata.load(td)
-      TableMetadata.resolvesBuilt.get() shouldBe 1L
+      TableMetadata.resolvesBuilt.get() shouldBe 0L
+      shouldEqualCold(appended)
+      // a DECLARED append extends the same way
+      val (declaredBuilds, declared) = loadAfter(append("d", declared = true))
+      declaredBuilds shouldBe 0L
+      declared.files should have size 200
+      shouldEqualCold(declared)
+      // a MoR delete-only commit keeps the very same refs (empty tail)
+      val refsBefore = m.manifests
+      val (deleteBuilds, deleted) = loadAfter {
+        m = TableMetadata.commit(td, m.copy(
+          version = m.version + 1,
+          deleteFiles = m.deleteFiles :+ DeleteFile(
+            "data/a/delete-1.parquet", Seq("k"), m.version + 1, 3L),
+          snapshots = m.snapshots :+ Snapshot(
+            m.version + 1, m.version + 1L, "delete", 0, m.files.size)),
+          Some(TableMetadata.AppendDelta(Nil)))
+      }
+      deleteBuilds shouldBe 0L
+      deleted.manifests shouldBe refsBefore
+      deleted.deleteFiles should have size 1
+      shouldEqualCold(deleted)
+      // a commit that REWRITES a chunk (COW DML shape: files leave
+      // chunk "b") breaks the prefix: full build
+      val gone = m.files.filter(_.startsWith("data/b/")).take(10).toSet
+      val (rewriteBuilds, rewritten) = loadAfter {
+        m = TableMetadata.commit(td, m.copy(
+          version = m.version + 1,
+          files = m.files.filterNot(gone),
+          fileStats = m.fileStats -- gone,
+          fileRows = m.fileRows -- gone,
+          fileSeq = m.fileSeq -- gone,
+          snapshots = m.snapshots :+ Snapshot(
+            m.version + 1, m.version + 1L, "overwrite", 0, m.files.size - gone.size)))
+      }
+      rewriteBuilds shouldBe 1L
+      rewritten.files should have size 190
+      shouldEqualCold(rewritten)
+      // consolidating the manifest list replaces every ref: full build
+      val (consolidateBuilds, consolidated) = loadAfter {
+        m = TableMetadata.commitConsolidatedManifests(td, TableMetadata.load(td))
+      }
+      consolidateBuilds shouldBe 1L
+      consolidated.manifests should have size 1
+      shouldEqualCold(consolidated)
+      // ...and appends extend the consolidated list again
+      val (postBuilds, post) = loadAfter(append("e"))
+      postBuilds shouldBe 0L
+      shouldEqualCold(post)
       // a FILTERED (pruned) resolve never caches and never serves from
       // the cache — it is scan-specific
       val summary = TableMetadata.loadSummary(td)
       val pruned = TableMetadata.resolveForScan(
         TableMetadata.metadataDir(td), summary,
         Seq(org.apache.spark.sql.sources.EqualTo("p", "a")))
-      pruned.files.size should be < 150
+      pruned.files.size should be < post.files.size
       // out-of-band version-file replacement (restore-from-backup
       // shape): the fingerprint mismatch forces a fresh resolve
       val vf = TableMetadata.versionFile(td, m.version)
@@ -222,6 +298,71 @@ class MetaScaleSpec extends AnyFunSuite with Matchers {
       TableMetadata.resolvesBuilt.set(0)
       TableMetadata.load(td)
       TableMetadata.resolvesBuilt.get() should be >= 1L
+    } finally {
+      Manifests.clearCacheForTesting()
+      graft.catalog.Fs.deleteRecursively(dir)
+    }
+  }
+
+  test("resolved-meta cache: a slower loader of an older version never " +
+    "replaces the newer live entry") {
+    import graft.catalog.{Manifests, Snapshot, TableMetadata}
+    import org.apache.spark.sql.types._
+    val dir = Files.createTempDirectory("graft-meta-race-")
+    val td = dir.resolve("t")
+    Files.createDirectories(td)
+    def create(): graft.catalog.TableMetadata = TableMetadata.commit(td, TableMetadata(
+      version = 1, name = "t", schema = StructType(Seq(StructField("k", IntegerType))),
+      partitionColumns = Nil, properties = Map.empty,
+      files = Nil, snapshots = Seq(Snapshot(1, 1L, "create", 0, 0))))
+    var m = create()
+    (0 until 3).foreach { c =>
+      val rels = (0 until 200).map(i => s"data/c$c/part-$i.parquet")
+      m = TableMetadata.commit(td, m.copy(
+        version = m.version + 1, files = m.files ++ rels,
+        snapshots = m.snapshots :+ Snapshot(
+          m.version + 1, m.version + 1L, "append", rels.size, 0)))
+    }
+    val newest = m.version
+    val mdDir = TableMetadata.metadataDir(td)
+    // an unfiltered resolveForScan of a version file is the cached
+    // resolve of THAT version (load only ever reads the newest)
+    def resolveAt(v: Int): graft.catalog.TableMetadata =
+      TableMetadata.resolveForScan(mdDir,
+        TableMetadata.fromJson(Files.readString(TableMetadata.versionFile(td, v))), Nil)
+    try {
+      // the slow loader's put lands last
+      TableMetadata.clearResolvedCacheForTesting()
+      resolveAt(newest)
+      resolveAt(newest - 1).files should have size 400
+      TableMetadata.cachedResolvedVersionForTesting(td) shouldBe Some(newest)
+      // two loaders released together, either finishing last: the
+      // cache always ends on the newest
+      (0 until 20).foreach { _ =>
+        TableMetadata.clearResolvedCacheForTesting()
+        val barrier = new java.util.concurrent.CyclicBarrier(2)
+        val results = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+        val threads = Seq(newest - 1, newest).map { v =>
+          new Thread(() => {
+            barrier.await()
+            results.put(v, resolveAt(v).files.size); ()
+          })
+        }
+        threads.foreach(_.start())
+        threads.foreach(_.join(30000))
+        results.get(newest - 1) shouldBe 400
+        results.get(newest) shouldBe 600
+        TableMetadata.cachedResolvedVersionForTesting(td) shouldBe Some(newest)
+      }
+      // a newer entry of a DROPPED table is dead: the table recreated at
+      // the same path replaces it from its first (lower) version on
+      graft.catalog.Fs.deleteRecursively(td)
+      Files.createDirectories(td)
+      val v1 = create()
+      TableMetadata.commit(td, v1.copy(version = 2, files = Vector("data/x/part-0.parquet"),
+        snapshots = v1.snapshots :+ Snapshot(2, 2L, "append", 1, 0)))
+      TableMetadata.load(td).files shouldBe Seq("data/x/part-0.parquet")
+      TableMetadata.cachedResolvedVersionForTesting(td) shouldBe Some(2)
     } finally {
       Manifests.clearCacheForTesting()
       graft.catalog.Fs.deleteRecursively(dir)

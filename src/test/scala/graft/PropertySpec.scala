@@ -273,6 +273,16 @@ class PropertySpec extends AnyFunSuite with Matchers {
     }
   }
 
+  test("connected components: a cutoff past Int.MaxValue keeps every edge (no toInt wrap)") {
+    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (7L, 9L), (9L, 8L)).toDF("id1", "id2")
+    def comps(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val viaDefault = comps(graft.queries.TextOps.connectedComponents(pairs))
+    viaDefault should not be empty
+    comps(graft.queries.TextOps.connectedComponents(pairs, smallCutoff = Long.MaxValue)) shouldBe
+      viaDefault
+  }
+
   test("set algebra: (a ∪ b) ∖ b ⊆ a and a ∩ b ⊆ a") {
     forAll(Gen.listOf(Gen.choose(0, 20)), Gen.listOf(Gen.choose(0, 20))) { (xs, ys) =>
       val a = xs.toDF("v")

@@ -123,4 +123,45 @@ class RestRegistryCoherenceSpec extends AnyFunSuite with Matchers {
     val after = Files.getLastModifiedTime(reg)
     after.compareTo(future) should be > 0
   }
+
+  test("register / unregister / unregisterPrefix validate under the lock: " +
+    "a peer rewrite landing before the stamp still invalidates the known cache") {
+    // `op` rewrites the registry while a peer's rewrite (dropping
+    // nsa/t1) lands after `op` started and before its own stamp
+    def peerRewriteDuring(op: java.nio.file.Path => Unit, after: Set[String]): Unit = {
+      RestRegistry.clearKnownForTesting()
+      val wh = freshWh()
+      Files.createDirectories(wh.resolve("nsb"))
+      Files.writeString(wh.resolve("nsb/_namespace.json"), "{}")
+      val reg = RestRegistry.registryFile(wh)
+      Files.writeString(reg, "")
+      mkTable(wh, "nsa/t1"); mkTable(wh, "nsb/t2"); mkTable(wh, "nsb/t3")
+      RestRegistry.maybeRegister(wh.resolve("nsa/t1"))
+      RestRegistry.maybeRegister(wh.resolve("nsb/t2"))
+      RestRegistry.readEntries(wh).get shouldBe Set("nsa/t1", "nsb/t2")
+      // a peer PROCESS holds the registry lock (simulated by a separate
+      // channel in this JVM) while `op` is already under way
+      import java.nio.file.StandardOpenOption.{CREATE, WRITE}
+      val ch = java.nio.channels.FileChannel.open(
+        wh.resolve("_rest_tables.lock"), CREATE, WRITE)
+      val held = ch.lock()
+      val worker = new Thread(() => op(wh))
+      try {
+        worker.start()
+        Thread.sleep(300) // `op` is now waiting for the lock
+        Files.writeString(reg, "nsb/t2")
+      } finally { held.release(); ch.close() }
+      worker.join(10000)
+      worker.isAlive shouldBe false
+      RestRegistry.readEntries(wh).get shouldBe after
+      // this JVM recreates nsa/t1 and commits: the peer's rewrite must
+      // have purged `known`, or the registration short-circuits forever
+      RestRegistry.maybeRegister(wh.resolve("nsa/t1"))
+      RestRegistry.readEntries(wh).get shouldBe after + "nsa/t1"
+    }
+    peerRewriteDuring(wh => RestRegistry.maybeRegister(wh.resolve("nsb/t3")),
+      Set("nsb/t2", "nsb/t3"))
+    peerRewriteDuring(wh => RestRegistry.unregister(wh, "nsb/t2"), Set.empty)
+    peerRewriteDuring(wh => RestRegistry.unregisterPrefix(wh, "nsb"), Set.empty)
+  }
 }
